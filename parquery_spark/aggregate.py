@@ -33,6 +33,7 @@ from typing import Any, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import NullType
 
 from parquery_spark import fs, relations, tool
 from parquery_spark.plans.aggregation import build_aggregation_plan
@@ -143,7 +144,7 @@ def aggregate_pq(
 
     def _execute(paths, use_relation_cache=True):
         spark = get_spark()
-        if _is_small_input(paths):
+        if relations.is_small_input(paths):
             # Execute under the dedicated small-query session (AQE off,
             # single reduce partition, interpreted codegen) instead of
             # mutating the shared session's conf — thread-safe by
@@ -241,23 +242,6 @@ def _pinned_snapshot(file_name):
                 pass
 
 
-#: below this total input size, per-query latency is dominated by fixed
-#: scheduling costs — AQE's extra stage re-planning and a wide shuffle buy
-#: nothing (measured ~25% latency saving at 600k rows, local mode)
-SMALL_INPUT_BYTES = 256 << 20
-
-
-def _is_small_input(file_name) -> bool:
-    paths = [file_name] if isinstance(file_name, str) else list(file_name)
-    try:
-        total = sum(fs.getsize(p) for p in paths if fs.exists(p))
-    except OSError:
-        # unknown size (remote URI without a metadata backend): treat as
-        # large — the full-session scale path is the safe default
-        return False
-    return total < SMALL_INPUT_BYTES
-
-
 #: aggregate_pq op name → pyarrow group_by aggregation name, for
 #: finalize_group_by (reference accepts pyarrow names directly; we also map
 #: this package's op vocabulary so the two APIs compose).
@@ -316,8 +300,12 @@ def _to_arrow(df: DataFrame) -> pa.Table:
     except Exception:
         # NullType empty results can trip Arrow conversion on some versions;
         # synthesize the null-typed table directly (reference contract:
-        # parquery/tool.py:222-237).
-        if df.isEmpty():
-            schema = pa.schema([(c, pa.null()) for c in df.columns])
-            return pa.Table.from_pydict({c: [] for c in df.columns}, schema=schema)
-        raise
+        # parquery/tool.py:222-237).  Any other conversion error is real
+        # and propagates without a second Spark job.
+        null_typed = any(
+            isinstance(f.dataType, NullType) for f in df.schema.fields
+        )
+        if not (null_typed and df.isEmpty()):
+            raise
+        schema = pa.schema([(c, pa.null()) for c in df.columns])
+        return pa.Table.from_pydict({c: [] for c in df.columns}, schema=schema)

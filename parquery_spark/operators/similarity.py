@@ -502,9 +502,9 @@ def cosine_topk_indexed(
         (1 << j) for j, p in enumerate(planes) if float(np.dot(p, query)) > 0
     )
     probes = hamming_ball(qsig, num_planes, probe_hamming)
-    from parquery_spark.operators.util import index_relation
+    from parquery_spark.artifacts import _artifact_relation
 
-    candidates = index_relation(spark, index_path).filter(
+    candidates = _artifact_relation(spark, index_path).filter(
         F.col("bucket").isin(probes)
     )
     return cosine_topk(candidates, query, k, vec_col, id_col, digits)

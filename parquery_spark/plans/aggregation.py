@@ -307,7 +307,7 @@ def build_aggregation_plan(
     # Expand-based distributed plan.  CAST keeps the engine's BIGINT
     # count-distinct output type.
     sql_aggs = _SQL_AGGS
-    if use_relation_cache and _cached_small_input(live_paths):
+    if use_relation_cache and relations.is_small_input(live_paths):
         sql_aggs = dict(
             _SQL_AGGS,
             count_distinct="CAST(SIZE(COLLECT_SET({c})) AS BIGINT)",
@@ -372,16 +372,3 @@ def build_aggregation_plan(
         f"SELECT {distinct}{', '.join(final)} FROM {_qi(view)}{where}{group}"
     )
     return relations.cached_sql(spark, sql, args)
-
-
-def _cached_small_input(paths: Sequence[str]) -> bool:
-    """True when the input is under the hot-relation-cache size bound.
-    Unknown sizes (remote URIs without a metadata backend) are NOT small —
-    the scale path is the safe default."""
-    try:
-        return (
-            sum(fs.getsize(p) for p in paths)
-            < relations.MAX_CACHED_INPUT_BYTES
-        )
-    except OSError:
-        return False

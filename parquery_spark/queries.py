@@ -21,7 +21,12 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquery_spark import relations
+from parquery_spark import fs, relations
+from parquery_spark.artifacts import (
+    _artifact_relation,
+    _materialize_once,
+    artifact_dir,
+)
 from parquery_spark.operators.reuse import self_join_reusing
 from parquery_spark.operators.util import fan_out
 from parquery_spark.plans.aggregation import build_aggregation_plan
@@ -133,206 +138,6 @@ def _probe_rows(sf_dir: str, ids) -> list[dict]:
         filters=[("vec_id", "in", [int(i) for i in ids])],
     )
     return tbl.to_pylist()
-
-
-def _artifact_relation(spark: SparkSession, path: str) -> DataFrame:
-    """A parquet dir (usually a stat-keyed artifact) as a lazy relation
-    through the per-session analyzed-plan cache (round 12): building
-    ``spark.read.parquet`` costs ~90 ms of driver listing/footer work per
-    call regardless of size; the plan object is immutable for a given
-    ``_SUCCESS`` version, so reuse it.  Nothing is persisted — pruning,
-    PushedFilters and AQE behave exactly as with a fresh read; a rewritten
-    artifact (new ``_SUCCESS`` stat) gets a fresh listing."""
-    from parquery_spark.operators.util import index_relation
-
-    return index_relation(spark, path)
-
-
-def _materialize_once(final_dir: str, build, marker: str = "_SUCCESS") -> str:
-    """Publish a stat-keyed fixture directory ATOMICALLY: build into a
-    private tmp root, then one ``os.rename`` to the final path.
-
-    The naive pattern — check ``final/marker``, else run a multi-file
-    Spark write INTO ``final`` — has two races that bit this repo (gate
-    and scale_smoke running concurrently saw FAILED_READ_FILE): a reader
-    can list the directory mid-write, and two builders can interleave
-    file sets.  Build-then-rename closes both: readers only ever see a
-    complete artifact (the marker is inside the renamed tree), and when
-    two builders race, the rename loser discards its (bit-equivalent —
-    content is a pure function of the stat key) copy.
-
-    ``build(tmp_dir)`` must leave ``tmp_dir/marker`` present (Spark's
-    committer writes ``_SUCCESS`` at every output root; multi-dir
-    fixtures pass the LAST-written subpath, e.g. ``"codebook/_SUCCESS"``,
-    as the marker).  A half-written ``final_dir`` from a crashed legacy
-    run (no marker) is cleared before publishing.
-    """
-    import shutil
-    import uuid
-
-    if os.path.exists(os.path.join(final_dir, marker)):
-        _check_artifact_owner(final_dir)
-        return final_dir
-    # unique per ATTEMPT (not per process): two threads of one session
-    # racing the same fixture must not share a build root
-    tmp = f"{final_dir}.build-{uuid.uuid4().hex[:12]}"
-    build(tmp)
-    if not os.path.exists(os.path.join(tmp, marker)):
-        raise OSError(
-            f"fixture builder for {final_dir!r} did not produce {marker!r}"
-        )
-    if os.path.isdir(final_dir) and not os.path.exists(
-        os.path.join(final_dir, marker)
-    ):
-        shutil.rmtree(final_dir, ignore_errors=True)
-    try:
-        os.rename(tmp, final_dir)
-    except OSError:
-        # Either we lost the publish race (the winner's artifact is
-        # equivalent — content is a pure function of the stat key) or the
-        # rename genuinely failed (EACCES, EXDEV, ...).  Distinguish by
-        # re-checking the marker: a missing artifact here would otherwise
-        # surface much later as a confusing read error far from the cause.
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(os.path.join(final_dir, marker)):
-            raise
-        _check_artifact_owner(final_dir)  # the race winner must be us-ish
-    # GC runs only on the build path (a fresh corpus version just
-    # published), never on the stat-only hot path
-    _sweep_stale_versions(final_dir)
-    _sweep_global_budget(final_dir)
-    return final_dir
-
-
-def _sweep_stale_versions(final_dir: str, max_versions: int = 8) -> None:
-    """Reap STALE corpus versions of the artifact prefix just published:
-    keep the ``max_versions`` most-recently-built sibling directories
-    (``{prefix}_{10-hex-stat-tag}``), delete the rest.  Without this the
-    stat-keyed scheme accumulates one directory per (corpus version ×
-    logic tag) forever.
-
-    Safety: (a) runs only when a NEW version was just built — a steady
-    workload never deletes anything; (b) never deletes across uids (the
-    ``_check_artifact_owner`` rule applied to deletion); (c) the default
-    keeps 8 versions because up to ~5 tags per prefix are legitimately
-    live at once (three test SFs + the ×10/×100 scale-smoke corpora),
-    and the one-workload-at-a-time rule (NOTES.md) means nothing is
-    mid-read while a build publishes."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-
-    m = _re.fullmatch(r"(.*)_[0-9a-f]{10}", final_dir)
-    if not m:
-        return
-    prefix = m.group(1)
-    sibs = []
-    for d in _glob.glob(prefix + "_" + "[0-9a-f]" * 10):
-        if d == final_dir or not os.path.isdir(d):
-            continue
-        try:
-            st = os.stat(d)
-        except OSError:
-            continue
-        if hasattr(os, "getuid") and st.st_uid != os.getuid():
-            continue  # never cross-uid delete
-        sibs.append((st.st_mtime, d))
-    sibs.sort(reverse=True)
-    # the just-published artifact counts toward the budget
-    for _, d in sibs[max_versions - 1:]:
-        _shutil.rmtree(d, ignore_errors=True)
-
-
-def _sweep_global_budget(
-    final_dir: str, budget_bytes: int | None = None
-) -> None:
-    """Per-uid TOTAL-bytes budget across ALL stat-keyed artifact prefixes
-    (VERDICT r10 #7): the per-prefix keep-8 sweep bounds versions per
-    prefix, but the number of prefixes grows with the query surface, so
-    the combined /tmp footprint was unbounded globally.  On publish, if
-    this uid's artifact directories under the same temp root together
-    exceed the budget (``PARQUERY_SPARK_ARTIFACT_BUDGET_BYTES``, default
-    4 GiB), reap OLDEST-FIRST by mtime until back under it.
-
-    Same guards as the per-prefix sweep: runs only on the build path;
-    only directories matching the ``pqs_{...}_{10-hex}`` naming scheme;
-    never across uids; never the just-published artifact (every other
-    artifact is rebuildable from its stat key, so reclamation costs a
-    rebuild, never correctness)."""
-    import glob as _glob
-    import re as _re
-    import shutil as _shutil
-
-    if budget_bytes is None:
-        budget_bytes = int(
-            os.environ.get(
-                "PARQUERY_SPARK_ARTIFACT_BUDGET_BYTES", str(4 << 30)
-            )
-        )
-    root = os.path.dirname(final_dir)
-    name_pat = _re.compile(r"pqs_.+_[0-9a-f]{10}")
-    entries = []
-    for d in _glob.glob(os.path.join(root, "pqs_*")):
-        if not os.path.isdir(d) or not name_pat.fullmatch(
-            os.path.basename(d)
-        ):
-            continue
-        try:
-            st = os.stat(d)
-        except OSError:
-            continue
-        if hasattr(os, "getuid") and st.st_uid != os.getuid():
-            continue  # never cross-uid delete
-        size = 0
-        for dirpath, _dirs, files in os.walk(d, onerror=lambda e: None):
-            for f in files:
-                try:
-                    size += os.lstat(os.path.join(dirpath, f)).st_size
-                except OSError:
-                    pass
-        entries.append((st.st_mtime, size, d))
-    total = sum(s for _, s, _ in entries)
-    if total <= budget_bytes:
-        return
-    entries.sort()  # oldest first
-    for _, size, d in entries:
-        if d == final_dir:
-            continue
-        _shutil.rmtree(d, ignore_errors=True)
-        total -= size
-        if total <= budget_bytes:
-            break
-
-
-def _check_artifact_owner(final_dir: str) -> None:
-    """Stat-keyed artifacts live at predictable names under the shared
-    /tmp; on a multi-user host another local user could squat/poison the
-    path and queries would silently read foreign data.  Trust a
-    pre-existing artifact only if we own it."""
-    st = os.stat(final_dir)
-    if hasattr(os, "getuid") and st.st_uid != os.getuid():
-        raise PermissionError(
-            f"artifact directory {final_dir!r} is owned by uid "
-            f"{st.st_uid}, not this process (uid {os.getuid()}) — "
-            "refusing to read a foreign /tmp artifact; remove it or set "
-            "a private TMPDIR"
-        )
-
-
-def _stat_dir(sf_dir: str, table: str, logic_tag: str, prefix: str) -> str:
-    """Stat-keyed /tmp directory for a per-corpus-version model/index
-    artifact: the key folds the source file identity (path, mtime, size)
-    with a logic-version tag — bump the tag whenever the building logic
-    changes, or a stale artifact silently masks the new path (NOTES.md
-    hazard).  Pair with :func:`_materialize_once` for atomic publish."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, table)
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|{logic_tag}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1224,7 +1029,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarts, which the in-memory cache never did)."""
     from parquery_spark.operators.dedup import lsh_verified_pairs
 
-    pdir = _stat_dir(
+    pdir = artifact_dir(
         sf_dir, "documents", "vpairs-15-5-2-t0.5-v1", "pqs_vpairs"
     )
 
@@ -1279,7 +1084,7 @@ def _mh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     a filter of the full banding IS the slice's banding)."""
     from parquery_spark.operators.dedup import band_keys
 
-    bdir = _stat_dir(sf_dir, "documents", "mh-full-16-4-2-v1", "pqs_mhfull")
+    bdir = artifact_dir(sf_dir, "documents", "mh-full-16-4-2-v1", "pqs_mhfull")
 
     def _build(t):
         band_keys(
@@ -1314,7 +1119,7 @@ def q44_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    sdir = _stat_dir(sf_dir, "documents", "sh-60-v1", "pqs_shtable")
+    sdir = artifact_dir(sf_dir, "documents", "sh-60-v1", "pqs_shtable")
 
     def _build(t):
         simhash_table(
@@ -1434,7 +1239,7 @@ def q47_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure function of (corpus, planes), staged once stat-keyed; the
     # verify join then reads parquet on both alias sides (params are in
     # the logic tag, matching the injected-relation contract)
-    bdir = _stat_dir(
+    bdir = artifact_dir(
         sf_dir, "embeddings", "nd-bucket-p4-s7-d64-v1", "pqs_ndidx"
     )
 
@@ -1630,7 +1435,7 @@ def q50_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "png-pixels-v1", "pqs_pximg")
+    fdir = artifact_dir(sf_dir, "documents", "png-pixels-v1", "pqs_pximg")
 
     def _build(t):
         os.makedirs(t, exist_ok=True)
@@ -2369,7 +2174,10 @@ def q65_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ≤200k edges, driver Lloyd ≤4096 vectors).  The string cast is
     # injective per column type, so the distinct count is unchanged;
     # count_distinct drops NULLs on both shapes.
-    if os.path.getsize(_path(sf_dir, "orders")) >= (1 << 30):
+    # a directory-of-parts table sizes as the sum of its part files
+    src = _path(sf_dir, "orders")
+    parts = fs.glob(os.path.join(src, "*.parquet")) or [src]
+    if sum(map(fs.getsize, parts)) >= (1 << 30):
         exacts = (
             orders.select(
                 F.explode(
@@ -2461,29 +2269,27 @@ def q67_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``aggregate_pq`` plan path (header+inference read, tolerant-schema
     pre-flight, relation cache).  The oracle reads the parquet twin, so
     format equivalence itself is what's gated."""
-    import hashlib
-    import tempfile
-
     import pyarrow.csv as pacsv
     import pyarrow.parquet as papq
 
     from parquery_spark.aggregate import aggregate_plan
 
-    src = os.path.join(sf_dir, "nation.parquet")
-    # cache key includes the source file's stat identity (mtime_ns, size),
-    # mirroring relations._stat_key — a regenerated nation.parquet gets a
-    # fresh CSV instead of silently serving the previous corpus's fixture
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    dst = os.path.join(tempfile.gettempdir(), f"pqs_nation_{tag}.csv")
-    if not os.path.exists(dst):
-        tbl = papq.read_table(src).sort_by([("n_nationkey", "ascending")])
-        tmp = dst + ".tmp"
-        pacsv.write_csv(tbl, tmp)  # vectorized, no per-row Python
-        os.replace(tmp, dst)
+    # keyed by the source's stat identity: a regenerated nation.parquet
+    # gets a fresh CSV instead of silently serving the previous one
+    def _build(t):
+        tbl = papq.read_table(_path(sf_dir, "nation")).sort_by(
+            [("n_nationkey", "ascending")]
+        )
+        os.makedirs(t)
+        # vectorized, no per-row Python
+        pacsv.write_csv(tbl, os.path.join(t, "nation.csv"))
+
+    d = _materialize_once(
+        artifact_dir(sf_dir, "nation", "", "pqs_nation"), _build,
+        marker="nation.csv",
+    )
     return aggregate_plan(
-        dst,
+        os.path.join(d, "nation.csv"),
         ["n_regionkey"],
         [["n_nationkey", "count", "n"], ["n_name", "one", "first_name"],
          ["n_nationkey", "max", "max_key"]],
@@ -3217,23 +3023,16 @@ def q82_indexed_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters — pinned in ``tests/test_scale_plans.py``), and
     equi-joins on the full band key.  Same oracle as q75: indexing must
     not change a single candidate pair."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.dedup import (
         lsh_join_indexed,
         write_minhash_index,
     )
 
-    src = _path(sf_dir, "documents")
-    st = os.stat(src)
     # a 5% ingest batch vs a 95% corpus — the realistic ratio where the
     # index pays: the probe set covers few (band, prefix) directories, so
     # partition pruning skips most of the index
     # trailing v2 = adaptive-prefix layout generation (writer logic tag)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|16|4|2|20|v2"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    idx = os.path.join(tempfile.gettempdir(), f"pqs_mh_idx_{tag}")
+    idx = artifact_dir(sf_dir, "documents", "16|4|2|20|v2", "pqs_mh_idx")
     docs = load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     idx = _materialize_once(
@@ -3297,9 +3096,6 @@ def q83_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Index + centroids are built once per corpus version (stat-identity
     cache, centroids stored next to the data as the index metadata —
     exactly what a production layout persists)."""
-    import hashlib
-    import tempfile
-
     import numpy as np
 
     from parquery_spark.operators import ivf
@@ -3310,11 +3106,7 @@ def q83_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.5 gate detects a broken quantizer with 2 steps of margin
     k_cells, nprobe, topk = 16, 8, 10
 
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|ivf16"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    idx = os.path.join(tempfile.gettempdir(), f"pqs_ivf_idx_{tag}")
+    idx = artifact_dir(sf_dir, "embeddings", "ivf16", "pqs_ivf_idx")
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def _build_ivf(t):
@@ -3425,25 +3217,21 @@ def _events_stream_dir(sf_dir: str) -> str:
     (copy fallback) into a temp dir keyed by the file's stat identity —
     the file stream source requires a directory, and the link pins the
     snapshot the same way the batch read hardening does."""
-    import hashlib
     import shutil
-    import tempfile
 
     src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    d = os.path.join(tempfile.gettempdir(), f"pqs_events_src_{tag}")
-    dst = os.path.join(d, "events.parquet")
-    if not os.path.exists(dst):
-        os.makedirs(d, exist_ok=True)
-        tmp = dst + ".tmp"
+
+    def _build(t):
+        os.makedirs(t)
         try:
-            os.link(src, tmp)
+            os.link(src, os.path.join(t, "events.parquet"))
         except OSError:
-            shutil.copy2(src, tmp)
-        os.replace(tmp, dst)
-    return d
+            shutil.copy2(src, os.path.join(t, "events.parquet"))
+
+    return _materialize_once(
+        artifact_dir(sf_dir, "events", "", "pqs_events_src"), _build,
+        marker="events.parquet",
+    )
 
 
 @query(
@@ -4004,17 +3792,12 @@ def _sentinel_stream_dir(
     max (observed: a stream-stream join over type-filtered sides never
     flushed its last <delay + join-window> of outer-join state).  Pass
     one type per filtered branch so every branch's watermark advances."""
-    import hashlib
     import shutil
 
     src_dir = _events_stream_dir(sf_dir)
-    tag = (
-        "" if types == ("sentinel",)
-        else "_" + hashlib.md5("|".join(types).encode()).hexdigest()[:6]
-    )
-    sent_dir = src_dir + "_sentinel" + tag
-    if not os.path.exists(os.path.join(sent_dir, "z2.parquet")):
-        os.makedirs(sent_dir, exist_ok=True)
+
+    def _build(sent_dir):
+        os.makedirs(sent_dir)
         shutil.copy2(
             os.path.join(src_dir, "events.parquet"),
             os.path.join(sent_dir, "events.parquet"),
@@ -4049,7 +3832,14 @@ def _sentinel_stream_dir(
                 os.path.join(sent_dir, "events.parquet")
             ).st_mtime + 10 * (i + 1)
             os.utime(os.path.join(sent_dir, name), (ts_mtime, ts_mtime))
-    return sent_dir
+
+    return _materialize_once(
+        artifact_dir(
+            sf_dir, "events", "sentinel|" + "|".join(types),
+            "pqs_events_sentinel",
+        ),
+        _build, marker="z2.parquet",
+    )
 
 
 @query("q97_streaming_sessionize", _SESSION_SQL)
@@ -4110,16 +3900,9 @@ def q98_partitioned_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens files outside the range (asserted in
     ``tests/test_scale_plans.py``).  The oracle filters the RAW table —
     the layout must change I/O, never results."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.sources.parquet import write_partitioned
 
-    src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|byday"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    lay = os.path.join(tempfile.gettempdir(), f"pqs_events_byday_{tag}")
+    lay = artifact_dir(sf_dir, "events", "byday", "pqs_events_byday")
 
     def _build_byday(t):
         events = load_events(spark, sf_dir).select(
@@ -4128,11 +3911,7 @@ def q98_partitioned_dataset(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_partitioned(events.repartition("day"), t, ["day"])
 
-    lay = _materialize_once(lay, _build_byday)
-
-    from parquery_spark.operators.util import index_relation
-
-    part = index_relation(spark, lay)
+    part = _artifact_relation(spark, _materialize_once(lay, _build_byday))
     return (
         part.filter(
             (F.col("day") >= F.lit("2024-01-10").cast("date"))
@@ -4226,7 +4005,7 @@ def q100_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, later calls read the |segments|-row parquet."""
     from parquery_spark.operators.dedup import hash64
 
-    cdir = _stat_dir(sf_dir, "lineitem", "cksum-v1", "pqs_cksum")
+    cdir = artifact_dir(sf_dir, "lineitem", "cksum-v1", "pqs_cksum")
 
     def _build(t):
         li = load(spark, sf_dir, "lineitem")
@@ -4261,14 +4040,8 @@ def q101_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; shuffle-freeness is plan-asserted in CI).  Results are gated
     against the plain-join oracle — bucketing must change the plan, never
     the answer."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|bkt8"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_bucketed_{tag}")
+    base = artifact_dir(sf_dir, "orders", "bkt8", "pqs_bucketed")
+    tag = base.rsplit("_", 1)[1]
 
     specs = (
         ("orders", "o_orderkey", "o_orderkey, o_orderstatus"),
@@ -4850,7 +4623,7 @@ def _winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-call memo; this is the explicit, restart-surviving form."""
     from parquery_spark.operators.dedup import winnow_fingerprints
 
-    wdir = _stat_dir(sf_dir, "documents", "winnow-k5w4-v1", "pqs_winnow")
+    wdir = artifact_dir(sf_dir, "documents", "winnow-k5w4-v1", "pqs_winnow")
 
     def _build(t):
         winnow_fingerprints(
@@ -5316,7 +5089,7 @@ def q118_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bucket sums over the histogram (identical to counting raw token
     # instances, without re-tokenizing the corpus per consumer), top-20
     # is a TakeOrderedAndProject over the same relation
-    hdir = _stat_dir(
+    hdir = artifact_dir(
         sf_dir, "documents", "shingle-hist-v1", "pqs_shhist"
     )
 
@@ -5458,7 +5231,7 @@ def q119_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q223-span pattern): the explode + df-cap window run once per
     # corpus, and all three consumers here (sizes + both self-join
     # sides) read parquet
-    gdir = _stat_dir(
+    gdir = artifact_dir(
         sf_dir, "documents", f"grams3-df{_Q119_MAX_DF}-v1", "pqs_gramidx"
     )
 
@@ -5530,17 +5303,10 @@ def q120_compaction_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group checksum proves the rewrite moved every row exactly once.
     Both rewrite steps are stat-keyed to the source file version, so a
     regenerated corpus invalidates the fixture."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.dedup import hash64
     from parquery_spark.operators.maintenance import compact_files
 
-    src = _path(sf_dir, "lineitem")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|compact"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"pqs_compact_{tag}")
+    root = artifact_dir(sf_dir, "lineitem", "compact", "pqs_compact")
 
     def _build_compacted(t):
         frag = os.path.join(t, "frag")
@@ -5834,19 +5600,12 @@ def q126_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once contract for the commonest production streaming job.
     The snapshot is versioned per batch (write-new + pointer swap, the
     MERGE pattern of any snapshot-isolated table format)."""
-    import hashlib
-    import tempfile
-
     from pyspark.sql import Window
 
     from parquery_spark.operators.upsert import upsert
     from parquery_spark.streaming.events import events_stream
 
-    src = _path(sf_dir, "events")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|supsert"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_supsert_{tag}")
+    base = artifact_dir(sf_dir, "events", "supsert", "pqs_supsert")
 
     def latest_per_user(df):
         w = Window.partitionBy("user_id").orderBy(
@@ -6318,7 +6077,7 @@ def q132_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact scan is the exchange all three iterations reuse.  Lineage
     stays flat because each iteration re-reads the edge parquet, not the
     previous plan — nothing persisted in-session."""
-    adir = _stat_dir(sf_dir, "lineitem", "pagerank-edges-v2", "pqs_pr")
+    adir = artifact_dir(sf_dir, "lineitem", "pagerank-edges-v2", "pqs_pr")
 
     def _build_edges(t):
         li = load(spark, sf_dir, "lineitem").select(
@@ -6487,17 +6246,10 @@ def q135_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table — the layout must change the I/O, never the answer.
     The narrowing of per-file min/max spans is asserted quantitatively in
     tests/test_pipeline_ops.py::TestZOrder."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.maintenance import write_zordered
 
-    src = _path(sf_dir, "lineitem")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|zorder"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
     zdir = _materialize_once(
-        os.path.join(tempfile.gettempdir(), f"pqs_zorder_{tag}"),
+        artifact_dir(sf_dir, "lineitem", "zorder", "pqs_zorder"),
         lambda t: write_zordered(
             load(spark, sf_dir, "lineitem"),
             t,
@@ -6700,14 +6452,7 @@ def q138_schema_evolution_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader (q52) applied across writes.  Both generations are materialized
     parquet fixtures (stat-keyed), so the union reads real files with
     genuinely different physical schemas."""
-    import hashlib
-    import tempfile
-
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|evo"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_evo_{tag}")
+    base = artifact_dir(sf_dir, "orders", "evo", "pqs_evo")
 
     def _build_generations(t):
         orders = load(spark, sf_dir, "orders")
@@ -7979,7 +7724,7 @@ def q158_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once as a stat-keyed storage artifact (the q132 pagerank-edges
     # pattern; round-9 honesty note: the former warm numbers here were
     # reading triangle_stats' leaked internal persists across calls)
-    edir = _stat_dir(sf_dir, "lineitem", "tri-edges-v1", "pqs_triedges")
+    edir = artifact_dir(sf_dir, "lineitem", "tri-edges-v1", "pqs_triedges")
 
     def _build_edges(t):
         li = load(spark, sf_dir, "lineitem").select(
@@ -8524,21 +8269,15 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to the working set (the q82/q83 index-amortization pattern):
     train once, prune per batch; a regenerated corpus invalidates the
     artifact and retrains."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.semdedup import kmeans_assign, semdedup
 
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
-    ident = (
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}"
-        "|kmeans4-vec-tc64"  # logic-version tag: vectorized kernel +
+    adir = artifact_dir(
+        sf_dir, "embeddings",
+        "kmeans4-vec-tc64",  # logic-version tag: vectorized kernel +
         # target_cell-derived k (round 7) — a stale kmeans3 artifact
         # would silently mask the new training path
+        "pqs_semdedup",
     )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    adir = os.path.join(tempfile.gettempdir(), f"pqs_semdedup_{tag}")
 
     emb = load(spark, sf_dir, "embeddings")
 
@@ -8564,7 +8303,7 @@ def q167_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # artifact and RELEASE the in-session copy — repeat calls read
     # parquet and the CacheManager stays flat (the former shape returned
     # semdedup's persisted relation, leaking one cache per call)
-    pdir = _stat_dir(
+    pdir = artifact_dir(
         sf_dir, "embeddings", "semdedup-prune-t04-tc64-v1", "pqs_sdprune"
     )
 
@@ -8839,16 +8578,7 @@ def q171_dynamic_partition_overwrite(
     values, patched days the new ones, matching the oracle's CASE
     twin.  Repartitioned on the partition column before the write so
     each day lands as one file, not (tasks x days) fragments."""
-    import hashlib
-
-    import tempfile
-
-    src_stat = os.stat(_path(sf_dir, "events"))
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{src_stat.st_mtime_ns}|{src_stat.st_size}"
-        "|cents-v2".encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_dpo_{tag}")
+    base = artifact_dir(sf_dir, "events", "cents-v2", "pqs_dpo")
 
     events = load_events(spark, sf_dir)
     day = F.date_trunc("day", F.col("ts").cast("timestamp")).cast("date")
@@ -9807,16 +9537,13 @@ def q185_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the capped (cust, item) basket relation IS the co-purchase index
     # this query probes — a pure function of (orders, lineitem), staged
-    # once as a stat-keyed storage artifact (the orders stat is folded
-    # into the logic tag since _stat_dir keys on one table); the join +
+    # once as a storage artifact keyed on both source tables; the join +
     # distinct + basket-cap window run once per corpus version and all
     # three consumers (popularity count + both self-join sides) read
     # parquet.  No persist (the former pre-renamed a/b select() sides
     # defeated reuse entirely and leaked a cache to compensate).
-    ost = os.stat(_path(sf_dir, "orders"))
-    bdir = _stat_dir(
-        sf_dir, "lineitem",
-        f"basket-b{_Q185_MAX_BASKET}-o{ost.st_mtime_ns}-{ost.st_size}-v1",
+    bdir = artifact_dir(
+        sf_dir, ("lineitem", "orders"), f"basket-b{_Q185_MAX_BASKET}-v1",
         "pqs_basket",
     )
 
@@ -10189,7 +9916,7 @@ def q188_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix-sum passes' driver round-trips (boundaries + per-bucket
     # totals, twice) re-read a 4-column parquet instead of re-running
     # token_count over the text column each time
-    sdir = _stat_dir(sf_dir, "documents", "docstats-v1", "pqs_docstats")
+    sdir = artifact_dir(sf_dir, "documents", "docstats-v1", "pqs_docstats")
 
     def _build_stats(t):
         load(spark, sf_dir, "documents").select(
@@ -10277,7 +10004,7 @@ def q189_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query exists to analyze — corpus-pure, staged once stat-keyed; the
     # prefix-sum passes and the normalizer then read a two-column
     # parquet instead of re-tokenizing the corpus per driver round-trip
-    vdir = _stat_dir(sf_dir, "documents", "vocab-v1", "pqs_vocab")
+    vdir = artifact_dir(sf_dir, "documents", "vocab-v1", "pqs_vocab")
 
     def _build_vocab(t):
         (
@@ -10412,15 +10139,7 @@ def q191_runtime_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog); the oracle recomputes from the raw log.  The
     stored-boolean-flag trap this guards against is pinned in
     tests/test_scale_plans.py::TestRuntimeOptimizations."""
-    import hashlib
-    import tempfile
-
-    src_stat = os.stat(_path(sf_dir, "events"))
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{src_stat.st_mtime_ns}|{src_stat.st_size}"
-        .encode()
-    ).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_dppq_{tag}")
+    base = artifact_dir(sf_dir, "events", "", "pqs_dppq")
     events = load_events(spark, sf_dir)
 
     def _build_star(t):
@@ -11088,15 +10807,9 @@ def q200_glob_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ghost_dim`` → -1, ``ghost_m`` → 0.0.  Fixture generations are
     written via Spark and re-laid as flat files so the glob genuinely
     selects among siblings of one directory."""
-    import hashlib
     import shutil
-    import tempfile
 
-    src = _path(sf_dir, "orders")
-    st = os.stat(src)
-    ident = f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|globdrift"
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    base = os.path.join(tempfile.gettempdir(), f"pqs_glob_{tag}")
+    base = artifact_dir(sf_dir, "orders", "globdrift", "pqs_glob")
 
     def _build_gens(t):
         orders = load(spark, sf_dir, "orders")
@@ -11809,32 +11522,36 @@ def q209_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: trained-tokenizer memo, keyed by corpus file identity + params — the
-#: in-process twin of the stat-keyed /tmp model artifacts (q83/q167/
-#: q211): q210 (train) and q214 (apply+account) share one training run
-#: per corpus version.  1-char words carry no pairs, so training on the
-#: full vs len>=2-filtered word stream yields identical merges.
-_BPE_MERGES_CACHE: dict[tuple, list[tuple[str, str, int]]] = {}
-
-
 def _bpe_merges(
     spark: SparkSession, sf_dir: str, n_merges: int = 3
 ) -> list[tuple[str, str, int]]:
+    """The trained tokenizer, a build-once artifact like the q83/q167/
+    q211 models: q210 (train) and q214 (apply+account) share one training
+    run per corpus version.  1-char words carry no pairs, so training on
+    the full vs len>=2-filtered word stream yields identical merges."""
+    import json
+
     from parquery_spark.operators.bpe import bpe_train
     from parquery_spark.operators.dedup import shingle_tokens
 
-    src = _path(sf_dir, "documents")
-    st = os.stat(src)
-    key = (os.path.abspath(src), st.st_mtime_ns, st.st_size, n_merges)
-    if key not in _BPE_MERGES_CACHE:
+    def _build(t):
         docs = load(spark, sf_dir, "documents")
         words = (
             fan_out(docs, "doc_id")
             .select(F.explode(shingle_tokens("text")).alias("word"))
             .where(F.length("word") >= 2)
         )
-        _BPE_MERGES_CACHE[key] = bpe_train(words, n_merges=n_merges)
-    return _BPE_MERGES_CACHE[key]
+        merges = bpe_train(words, n_merges=n_merges)
+        os.makedirs(t)
+        with open(os.path.join(t, "merges.json"), "w") as fh:
+            json.dump(merges, fh)
+
+    d = _materialize_once(
+        artifact_dir(sf_dir, "documents", f"bpe-m{n_merges}", "pqs_bpe"),
+        _build, marker="merges.json",
+    )
+    with open(os.path.join(d, "merges.json")) as fh:
+        return [tuple(m) for m in json.load(fh)]
 
 
 @query(
@@ -11976,21 +11693,12 @@ def q211_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     6); re-ranked recall@10 vs exact top-10 gates as a boolean >= 0.5
     (honest bar: near-uniform synthetic embeddings are the PQ worst
     case; measured 0.6-1.0 across SFs)."""
-    import hashlib
-    import tempfile
-
     from parquery_spark.operators.pq import adc_topk, pq_train
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    src = _path(sf_dir, "embeddings")
-    st = os.stat(src)
     # v2 logic tag: vectorized Lloyd kernel (round 7) — force re-encode so
     # the gate exercises the new training path, not a stale artifact
-    ident = (
-        f"{os.path.abspath(src)}|{st.st_mtime_ns}|{st.st_size}|pq_m8k16i2v2"
-    )
-    tag = hashlib.md5(ident.encode()).hexdigest()[:10]
-    adir = os.path.join(tempfile.gettempdir(), f"pqs_pq_model_{tag}")
+    adir = artifact_dir(sf_dir, "embeddings", "pq_m8k16i2v2", "pqs_pq_model")
 
     def _build_pq(t):
         codes, codebook = pq_train(emb, m=8, k=16, iters=2)
@@ -12010,7 +11718,7 @@ def q211_pq_adc_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row count from the parquet footer (round 12): the corpus relation
     # is the unfiltered single-file scan, so its cardinality is driver
     # metadata, not a Spark job
-    n = _footer_rows(src)
+    n = _footer_rows(_path(sf_dir, "embeddings"))
     shortlist = max(50, n // 20)
     qids = [0, 1, 2, 3]
     qrows = _probe_rows(sf_dir, qids)
@@ -12325,7 +12033,7 @@ def _word_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger priced at ~1 s/query.  Staged once per corpus version, the
     consumers read a |sources|x|vocab|-row parquet instead; same
     explicit, labeled sharing as q158's edge artifact, no persist."""
-    hdir = _stat_dir(sf_dir, "documents", "wordhist-v1", "pqs_wordhist")
+    hdir = artifact_dir(sf_dir, "documents", "wordhist-v1", "pqs_wordhist")
 
     def _build(t):
         from parquery_spark.operators.dedup import shingle_tokens
@@ -13055,7 +12763,7 @@ def q222_binary_file_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquery_spark.sources.binary import read_binary_files
 
     src = _path(sf_dir, "documents")
-    fdir = _stat_dir(sf_dir, "documents", "media60-codec-v2", "pqs_media")
+    fdir = artifact_dir(sf_dir, "documents", "media60-codec-v2", "pqs_media")
 
     def _build(t):
         import pyarrow.parquet as papq
@@ -13127,7 +12835,7 @@ def _substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     join in the family per gate run)."""
     from parquery_spark.operators.dedup import substring_spans
 
-    sdir = _stat_dir(
+    sdir = artifact_dir(
         sf_dir, "documents",
         # v2: the artifact builds with gram_key="hash" — the petabyte
         # shuffle form (two xxhash64 longs per row instead of the
@@ -13393,7 +13101,7 @@ def _docs_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     verdicts equal the batch bucket-min oracle (streaming/docs.py).
     ``feed_p1``/``feed_p2`` split the same files at the tertile-2/3
     boundary for the 2-phase drain→compact→drain lifecycle (v2)."""
-    d = _stat_dir(sf_dir, "documents", "docstream-3b-v2", "pqs_docstream")
+    d = artifact_dir(sf_dir, "documents", "docstream-3b-v2", "pqs_docstream")
 
     def _build(t):
         import glob as _glob
@@ -13505,7 +13213,7 @@ def q227_streaming_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # compaction: fold the drained increment's bucket minima into the
     # persistent index (stat-keyed: built once per corpus version)
-    idx_root = _stat_dir(sf_dir, "documents", "mhidx227-v1", "pqs_mhidx227")
+    idx_root = artifact_dir(sf_dir, "documents", "mhidx227-v1", "pqs_mhidx227")
 
     def _build_idx(t):
         os.makedirs(t, exist_ok=True)
@@ -13664,7 +13372,7 @@ def q229_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     session's UTC tz, and the gate would catch any drift as a shifted
     epoch.)  Reference is parquet-only (SURVEY §2.1); format breadth is
     an extension."""
-    d = _stat_dir(sf_dir, "orders", "orc-v1", "pqs_orders_orc")
+    d = artifact_dir(sf_dir, "orders", "orc-v1", "pqs_orders_orc")
 
     def _build(t):
         load(spark, sf_dir, "orders").write.mode("overwrite").orc(t)
@@ -13696,7 +13404,7 @@ def q230_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the text round trip (double formatting, timestamp parsing, quoting)
     is what's gated.  JSON is the lingua franca of event feeds; parquet
     -only reference, extension per SURVEY §2.4."""
-    d = _stat_dir(sf_dir, "orders", "jsonl-v1", "pqs_orders_jsonl")
+    d = artifact_dir(sf_dir, "orders", "jsonl-v1", "pqs_orders_jsonl")
 
     def _build(t):
         load(spark, sf_dir, "orders").write.mode("overwrite").json(t)
@@ -13947,7 +13655,7 @@ def q232_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "wav-pcm-v1", "pqs_pcmaud")
+    fdir = artifact_dir(sf_dir, "documents", "wav-pcm-v1", "pqs_pcmaud")
 
     def _build(t):
         os.makedirs(t, exist_ok=True)
@@ -14068,7 +13776,7 @@ def q233_video_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "avi-rgb-v1", "pqs_avivid")
+    fdir = artifact_dir(sf_dir, "documents", "avi-rgb-v1", "pqs_avivid")
 
     def _build(t):
         os.makedirs(t, exist_ok=True)
@@ -14182,7 +13890,7 @@ def q234_jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from parquery_spark.sources.binary import read_binary_files
 
-    fdir = _stat_dir(sf_dir, "documents", "jpeg-gray-v1", "pqs_jpeggray")
+    fdir = artifact_dir(sf_dir, "documents", "jpeg-gray-v1", "pqs_jpeggray")
 
     def _build(t):
         os.makedirs(t, exist_ok=True)

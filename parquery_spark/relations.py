@@ -39,7 +39,6 @@ DataFrame handles themselves are per-session; the cache stores one per
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import threading
 from collections import OrderedDict
@@ -50,22 +49,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from parquery_spark import fs
 
-#: Inputs at or above this total size are never cached (scale path).
-MAX_CACHED_INPUT_BYTES = int(
-    os.environ.get("PARQUERY_SPARK_RELATION_CACHE_MAX_FILE_BYTES", str(256 << 20))
-)
+#: Inputs at or above this total size are "large": never cached, never
+#: routed to the small-query session (scale path).
+MAX_CACHED_INPUT_BYTES = 256 << 20
 
 #: LRU capacity — number of distinct (path-set, stat) entries kept persisted.
-MAX_CACHED_RELATIONS = int(
-    os.environ.get("PARQUERY_SPARK_RELATION_CACHE_ENTRIES", "16")
-)
+MAX_CACHED_RELATIONS = 16
 
 #: Target rows per cached partition slice; chosen so a partial aggregation
 #: over one slice is a few milliseconds of work (scheduling overhead and
 #: per-slice work stay balanced in local mode and on executors alike).
 ROWS_PER_SLICE = 40_000
-
-_ENABLED = os.environ.get("PARQUERY_SPARK_RELATION_CACHE", "1") not in ("0", "false")
 
 _lock = threading.RLock()
 
@@ -96,22 +90,20 @@ _by_paths: dict[tuple, tuple] = {}
 #: file-listing-cache advice applied at the engine layer: re-listing a
 #: heavily partitioned table per query is minutes of driver time.
 _lazy_relations: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_MAX_LAZY_RELATIONS = int(
-    os.environ.get("PARQUERY_SPARK_LAZY_RELATION_ENTRIES", "512")
-)
-_LAZY_ENABLED = os.environ.get(
-    "PARQUERY_SPARK_LAZY_RELATION_CACHE", "1"
-) not in ("0", "false")
+_MAX_LAZY_RELATIONS = 512
 
 
-def _lazy_read(spark: SparkSession, path_list: Sequence[str]) -> DataFrame:
+def _lazy_read(
+    spark: SparkSession, path_list: Sequence[str], identity: str | None = None
+) -> DataFrame:
     """``_read`` through the lazy analyzed-relation cache (plan reuse only,
-    never data).  Falls back to a fresh read when stat identity is
-    unavailable (remote URI without a metadata backend)."""
-    if not _LAZY_ENABLED:
-        return _read(spark, path_list)
+    never data).  ``identity`` names one file whose stat stands for the
+    whole input — a directory layout's ``_SUCCESS`` marker, which changes
+    whenever the layout is rewritten.  Falls back to a fresh read when
+    stat identity is unavailable (remote URI without a metadata backend,
+    a layout without its marker)."""
     try:
-        key = (id(spark), _stat_key(path_list))
+        key = (id(spark), _stat_key([identity] if identity else path_list))
     except OSError:
         return _read(spark, path_list)
     with _lock:
@@ -360,6 +352,22 @@ def _plan_slices(paths: Sequence[str]) -> int:
     return want if want > natural else 0  # 0 → keep natural partitioning
 
 
+def is_small_input(paths: str | Sequence[str]) -> bool:
+    """True when the inputs that exist total under
+    :data:`MAX_CACHED_INPUT_BYTES` — the one small-input gate: the hot
+    relation cache, the small-query session and the small-input SQL
+    rewrites all key on it.  An unknown size (remote URI without a
+    metadata backend) is NOT small: the lazy full-session scan is the
+    safe default for data this engine cannot measure."""
+    if isinstance(paths, str):
+        paths = [paths]
+    try:
+        total = sum(fs.getsize(p) for p in paths if fs.exists(p))
+    except OSError:
+        return False
+    return total < MAX_CACHED_INPUT_BYTES
+
+
 def get_relation(
     spark: SparkSession, paths: str | Sequence[str], cache: bool = True
 ) -> DataFrame:
@@ -374,15 +382,7 @@ def get_relation(
         from parquery_spark.tool import MissingInputError
 
         raise MissingInputError(f"no files match: {paths}")
-    if not (_ENABLED and cache):
-        return _lazy_read(spark, path_list)
-    try:
-        total = sum(fs.getsize(p) for p in path_list)
-    except OSError:
-        # unknown size (e.g. remote URI with no metadata backend): go
-        # straight to the lazy uncached scan — the scale path
-        return _read(spark, path_list)
-    if total >= MAX_CACHED_INPUT_BYTES:
+    if not (cache and is_small_input(path_list)):
         return _lazy_read(spark, path_list)
 
     try:
@@ -472,7 +472,7 @@ def get_relation_view(
 #: minted fresh per (path-set, mtime, size) identity — a replaced file gets a
 #: new view name, hence a new cache key, so a stale plan can never be served.
 _plans: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-MAX_CACHED_PLANS = int(os.environ.get("PARQUERY_SPARK_PLAN_CACHE_ENTRIES", "128"))
+MAX_CACHED_PLANS = 128
 
 
 def cached_sql(spark: SparkSession, sql: str, args: dict | None = None) -> DataFrame:

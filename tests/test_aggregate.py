@@ -273,6 +273,41 @@ class TestOutputForms:
         for engine in ("auto", "spark", "duckdb", "pyarrow"):
             assert aggregate_pq(synthetic_pq, [], ["f4"], engine=engine).num_rows == 1
 
+    def test_arrow_conversion_error_propagates_without_second_job(
+        self, spark, monkeypatch
+    ):
+        """Only an empty NullType-schema result may fall back to the
+        synthesized null table; any other conversion error is raised as
+        is — no ``isEmpty()`` job re-runs the query first."""
+        from parquery_spark.aggregate import _to_arrow
+
+        df = spark.range(3)
+        empties = []
+
+        def boom(self):
+            raise ValueError("arrow conversion failed")
+
+        monkeypatch.setattr(type(df), "toArrow", boom)
+        monkeypatch.setattr(
+            type(df), "isEmpty", lambda self: empties.append(1) or False
+        )
+        with pytest.raises(ValueError, match="arrow conversion failed"):
+            _to_arrow(df)
+        assert empties == []
+
+    def test_empty_nulltype_result_synthesized(self, spark, monkeypatch):
+        from parquery_spark.aggregate import _to_arrow
+
+        df = spark.sql("SELECT NULL AS a WHERE 1 = 0")
+
+        def boom(self):
+            raise ValueError("arrow conversion failed")
+
+        monkeypatch.setattr(type(df), "toArrow", boom)
+        got = _to_arrow(df)
+        assert got.num_rows == 0
+        assert got.schema == pa.schema([("a", pa.null())])
+
 
 class TestRealData:
     """TPC-H Q1 shape on the driver's lineitem table — the reference API can
