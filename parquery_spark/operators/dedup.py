@@ -19,12 +19,19 @@ Design for 100 TB:
 * Skewed buckets (a shingle that appears in every doc) are the classic LSH
   hazard; AQE skew-join handles moderate skew, and ``max_bucket_size``
   drops degenerate buckets outright — standard practice at corpus scale.
+  Every bucket-join operator (MinHash, SimHash, the incremental joins and
+  the embedding near-dup pairs) caps, joins, verifies and dedups through
+  the one kernel :func:`_bucket_pairs`, so the cap and the verify order
+  are written once.
 
 The reference has no dedup operators (SURVEY.md §2.4); these are the
 beyond-reference pipeline capabilities.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -179,60 +186,31 @@ def _est_jaccard(num_hashes: int) -> "Column":
     return _cached_exprs("est_jaccard", (num_hashes,), build)
 
 
-def minhash_signature(
-    text: Column | str, num_hashes: int = 16, shingle_k: int = 3
-) -> Column:
-    """Array of ``num_hashes`` minima over the shingle set — the classic
-    MinHash signature; E[fraction of equal positions] = Jaccard.
-
-    Column-expression form for single-row/ad-hoc use.  For corpus-scale
-    signature computation use :func:`minhash_signatures`, which plans as
-    explode → hash → partial aggregation instead of nested array lambdas
-    (Catalyst re-inlines shared lambda subexpressions, so the expression
-    form recomputes the shingle array once per hash seed — measured 30×
-    slower at corpus scale)."""
-    sh = word_shingles(text, shingle_k)
-    base = F.transform(sh, lambda s: hash32(s) % F.lit(MINHASH_P))
-
-    # NB: coefficients must be bound via closure, not a defaulted second
-    # lambda arg — F.transform passes the ELEMENT INDEX to 2-arg lambdas.
-    def affine(a, b):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(base, affine(a, b)))
-            for a, b in minhash_coefficients(num_hashes)
-        ]
-    )
-
-
 def gram_sets(
     df: DataFrame,
     text_col: str,
     id_col: str,
     shingle_k: int = 3,
-    partition_by_id: bool = True,
 ) -> DataFrame:
     """One row per doc: ``(id, s = distinct shingles, n = |s|)`` — the
     shared input of signature computation AND exact-Jaccard verification.
 
-    ``partition_by_id`` applies :func:`~parquery_spark.operators.util.
-    fan_out` on the raw ``(id, text)`` rows BEFORE shingling: on an
-    under-split local corpus (one small parquet file → one task) it
-    hash-repartitions on the id so the shingle compute runs on all cores
-    AND the downstream ``groupBy(id)`` partial-agg needs no further
-    shuffle; on a well-split cluster-scale corpus it is a no-op (no
-    gratuitous full-text shuffle).  NOTE on fan-out: consumers whose
-    plans stay canonically identical up to an exchange (an ALIAS-based
-    self-join, or two branches hash-partitioned by the same column over
-    the identical subtree) share the exchange via ReuseExchange and the
-    shingle pass below it runs once; a consumer with a structurally
-    different plan (e.g. a groupBy at another key) re-executes the
-    narrow shingle projection.  A caller fanning the sets out to many
-    heterogeneous consumers stages them to storage (or passes a
-    caller-OWNED persisted handle via the ``sets`` parameters) — the
-    operators here deliberately persist nothing themselves."""
+    The raw ``(id, text)`` rows pass through :func:`~parquery_spark.
+    operators.util.fan_out` BEFORE shingling: on an under-split local
+    corpus (one small parquet file → one task) it hash-repartitions on
+    the id so the shingle compute runs on all cores AND the downstream
+    ``groupBy(id)`` partial-agg needs no further shuffle; on a well-split
+    cluster-scale corpus it is a no-op (no gratuitous full-text shuffle).
+    NOTE on fan-out: consumers whose plans stay canonically identical up
+    to an exchange (an ALIAS-based self-join, or two branches
+    hash-partitioned by the same column over the identical subtree)
+    share the exchange via ReuseExchange and the shingle pass below it
+    runs once; a consumer with a structurally different plan (e.g. a
+    groupBy at another key) re-executes the narrow shingle projection.
+    A caller fanning the sets out to many heterogeneous consumers stages
+    them to storage (or passes a caller-OWNED persisted handle via the
+    ``sets`` parameters) — the operators here deliberately persist
+    nothing themselves."""
     # the zip_with shingle tree costs ~15 py4j calls to build; parse once
     # per (column name, k) and reuse across probes (_EXPR_CACHE, round 13)
     grams = (
@@ -249,9 +227,7 @@ def gram_sets(
             else shingle_tokens(text_col)
         )
     )
-    src = df.select(F.col(id_col), F.col(text_col))
-    if partition_by_id:
-        src = fan_out(src, id_col)
+    src = fan_out(df.select(F.col(id_col), F.col(text_col)), id_col)
     return src.select(
         F.col(id_col), F.array_distinct(grams).alias("s")
     ).withColumn("n", F.size("s"))
@@ -281,10 +257,10 @@ def minhash_signatures(
     equals MinHash over the multiset — min ignores duplicates)."""
     coeffs = minhash_coefficients(num_hashes)
     if sets is None:
-        # partition_by_id also fans the shingle/hash compute out to all
-        # cores on an under-split corpus; the groupBy(id) below then
-        # re-uses that partitioning instead of adding a shuffle
-        sets = gram_sets(df, text_col, id_col, shingle_k, partition_by_id=True)
+        # gram_sets' fan_out also spreads the hash compute over all cores
+        # on an under-split corpus; the groupBy(id) below then re-uses
+        # that partitioning instead of adding a shuffle
+        sets = gram_sets(df, text_col, id_col, shingle_k)
     exploded = sets.select(
         F.col(id_col), F.explode("s").alias("__shingle")
     ).select(
@@ -350,6 +326,96 @@ def _check_injected_banding(
         )
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    keys: tuple[str, ...],
+    id_col: str,
+    carry: tuple[str, ...],
+    score: Column,
+    max_bucket_size: int | None,
+    build: DataFrame | None = None,
+    keep: Column | None = None,
+    ids: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """THE bucket-join kernel of the near-dup operators: cap degenerate
+    buckets, equi-join on the bucket ``keys``, score each candidate pair,
+    filter, and dedup the pairs that met in more than one bucket.
+
+    Without ``build`` it is an alias self-join of ``rows``
+    (:func:`~parquery_spark.operators.reuse.self_join_reusing`) pairing
+    ids within the relation, ``ids[0] < ids[1]``; with it, the probe
+    ``rows`` pair against ``build`` rows, never within either side.  Each
+    ``carry`` column reaches the verify as ``<c>_a`` (from ``rows``) and
+    ``<c>_b``; ``score`` is an aliased expression over them and ``keep``
+    an optional filter over the score.  Returns ``(*ids, score)``.
+
+    The join shape picks the cap form (``max_bucket_size=None`` keeps
+    exact enumeration):
+
+    * **self-join** — ``count() over Window(keys)``.  Its exchange
+      hash-partitions on the keys, the join's own required distribution,
+      and both alias sides are one plan, so ReuseExchange runs the map
+      work below it (signatures, banding) once.
+    * **two-sided** — the ``build`` side only: a narrow count aggregate
+      finds the over-cap buckets (its exchange carries per-bucket counts,
+      not rows) and a broadcast anti-join drops their rows map-side.  The
+      candidate join is usually broadcast and never reuses a window's
+      partitioning, so a window would pay a full Exchange + Sort of the
+      build rows per batch just for the cap.  Row-for-row equal to the
+      window filter for every key the join can match.
+
+    Measured on a 4-CPU host, 12 alternating pairs per query, identical
+    rows on both sides: the anti-join form on the self-joins of q178 and
+    q43 costs +14% (733 → 837 ms) and +19% (421 → 501 ms); the window
+    form on q44's self-join (anti-join before) saves 23% (711 → 551 ms,
+    12/12 wins).
+
+    Score and ``keep`` run BEFORE the pair dedup: the score is a pure
+    function of the two rows' payloads, so duplicate pairs carry
+    bit-identical scores and distinct over the narrow output equals
+    dedup-then-score — but the dedup exchange ships ids and one score
+    per pair instead of two payloads (signature arrays, vectors), and
+    rejected candidates never shuffle."""
+    if build is None:
+        if max_bucket_size is not None:
+            rows = rows.withColumn(
+                "bucket_n",
+                F.count(F.lit(1)).over(Window.partitionBy(*keys)),
+            ).filter(F.col("bucket_n") <= max_bucket_size)
+        cond = reduce(operator.and_, [
+            F.col(f"__pa.{k}") == F.col(f"__pb.{k}") for k in keys
+        ]) & (F.col(f"__pa.{id_col}") < F.col(f"__pb.{id_col}"))
+        pairs = self_join_reusing(rows, cond, a="__pa", b="__pb").select(
+            F.col(f"__pa.{id_col}").alias(ids[0]),
+            F.col(f"__pb.{id_col}").alias(ids[1]),
+            *[F.col(f"__p{s}.{c}").alias(f"{c}_{s}")
+              for s in "ab" for c in carry],
+        )
+    else:
+        if max_bucket_size is not None:
+            oversized = (
+                build.groupBy(*keys)
+                .agg(F.count(F.lit(1)).alias("bucket_n"))
+                .filter(F.col("bucket_n") > max_bucket_size)
+                .select(*keys)
+            )
+            build = build.join(F.broadcast(oversized), list(keys), "left_anti")
+
+        def side(df, s, out_id):
+            return df.select(
+                *keys, F.col(id_col).alias(out_id),
+                *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            )
+
+        pairs = side(rows, "a", ids[0]).join(
+            side(build, "b", ids[1]), list(keys)
+        )
+    out = pairs.select(*ids, score)
+    if keep is not None:
+        out = out.filter(keep)
+    return out.dropDuplicates()
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str,
@@ -374,8 +440,7 @@ def lsh_candidate_pairs(
     function of the corpus version; production computes them once per
     corpus, not once per query — :func:`write_minhash_index` is the
     partitioned variant of the same idea).  When omitted, the banding is
-    derived inline and the self-join sides share one execution of it via
-    ReuseExchange (alias self-join, no persisted intermediate).
+    derived inline and computed once for both join sides.
 
     Returns (id_a, id_b, est_jaccard) with id_a < id_b, deduplicated across
     bands.
@@ -387,44 +452,9 @@ def lsh_candidate_pairs(
     else:
         _check_injected_banding(banded, num_hashes, bands,
                                 "lsh_candidate_pairs(banded=)")
-
-    # drop degenerate buckets before the join
-    sized = banded.withColumn(
-        "bucket_n",
-        F.count(F.lit(1)).over(Window.partitionBy("band", "band_key")),
-    ).filter(F.col("bucket_n") <= max_bucket_size)
-
-    # Alias-based SELF-join over the one plan object (operators/reuse.py):
-    # ReuseExchange unifies the sides' shuffle subtrees and the shingle →
-    # explode → 16-way min-agg → banding map work executes ONCE, the
-    # second side reading the same map output — the zero-cache
-    # replacement for the MEMORY_AND_DISK persist this operator used to
-    # leak per call.  Only the bucket-count window above the reused
-    # exchange runs per side — a sort+count over already-shuffled
-    # compact rows.
-    # est_jaccard is computed BEFORE the cross-band pair dedup: it is a
-    # pure function of the two signatures, so every duplicate (id_a,
-    # id_b) row carries bit-identical values and distinct over the three
-    # narrow columns returns exactly the former first()-through-dedup
-    # rows — but the dedup exchange ships 24 bytes/pair instead of two
-    # num_hashes-long arrays, and the aggregate plans hash-partial
-    # map-side instead of SortAggregate-with-first over array buffers.
-    return (
-        self_join_reusing(
-            sized,
-            (F.col("__la.band") == F.col("__lb.band"))
-            & (F.col("__la.band_key") == F.col("__lb.band_key")),
-            a="__la", b="__lb",
-        )
-        .filter(F.col(f"__la.{id_col}") < F.col(f"__lb.{id_col}"))
-        .select(
-            F.col(f"__la.{id_col}").alias("id_a"),
-            F.col(f"__lb.{id_col}").alias("id_b"),
-            F.col("__la.sig").alias("sig_a"),
-            F.col("__lb.sig").alias("sig_b"),
-        )
-        .select("id_a", "id_b", _est_jaccard(num_hashes).alias("est_jaccard"))
-        .dropDuplicates()
+    return _bucket_pairs(
+        banded, ("band", "band_key"), id_col, ("sig",),
+        _est_jaccard(num_hashes).alias("est_jaccard"), max_bucket_size,
     )
 
 
@@ -653,11 +683,11 @@ def simhash_candidates(
     (band, chunk) buckets can hold a large corpus fraction — measured at
     100× (500k docs): billions of enumerated pairs, a multi-GB shuffle
     of candidates the hamming verify then rejects.  Buckets larger than
-    the cap are dropped on BOTH join sides (broadcast anti-join on the
-    oversized-bucket list — KBs).  Recall tradeoff: a true near-dup pair
-    whose only shared band lands in a dropped bucket is missed; docs in
-    an oversized bucket still pair through their other bands.  ``None``
-    keeps exact enumeration (fine through ~10× local corpora)."""
+    the cap are dropped on BOTH join sides.  Recall tradeoff: a true
+    near-dup pair whose only shared band lands in a dropped bucket is
+    missed; docs in an oversized bucket still pair through their other
+    bands.  ``None`` keeps exact enumeration (fine through ~10× local
+    corpora)."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
     if table is None:
@@ -680,48 +710,11 @@ def simhash_candidates(
             ) for b in range(bands)
         ])).alias("bk"),
     ).select(id_col, "sh", "bk.band", "bk.chunk")
-    if max_bucket_size is not None:
-        oversized = (
-            banded.groupBy("band", "chunk")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket_size)
-            .select("band", "chunk")
-        )
-        # bands x 2^band_bits rows at MOST, usually a handful: broadcast
-        banded = banded.join(
-            F.broadcast(oversized), ["band", "chunk"], "left_anti"
-        )
-    # alias self-join (operators/reuse.py) → ReuseExchange unifies the
-    # two sides' shuffle subtrees, so the tokenize + 60-vote aggregation
-    # executes once and the second side reads the same map output — the
-    # zero-cache replacement for the MEMORY_AND_DISK persist this
-    # operator used to leak per call (see lsh_candidate_pairs)
-    # hamming is a pure function of the two signatures, so the verify
-    # filter runs BEFORE the cross-band pair dedup: the dedup exchange
-    # carries only verified pairs (candidates the hamming cut rejects —
-    # the overwhelming majority under banding's random-collision floor —
-    # never shuffle), and distinct over the three narrow columns returns
-    # exactly the former filter-after-dedup rows.
-    hamming = (
-        F.bit_count(
-            F.col("__ha.sh").bitwiseXOR(F.col("__hb.sh"))
-        ).cast("long")
-    )
-    return (
-        self_join_reusing(
-            banded,
-            (F.col("__ha.band") == F.col("__hb.band"))
-            & (F.col("__ha.chunk") == F.col("__hb.chunk")),
-            a="__ha", b="__hb",
-        )
-        .filter(F.col(f"__ha.{id_col}") < F.col(f"__hb.{id_col}"))
-        .select(
-            F.col(f"__ha.{id_col}").alias("id_a"),
-            F.col(f"__hb.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates()
+    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
+    return _bucket_pairs(
+        banded, ("band", "chunk"), id_col, ("sh",),
+        hamming.cast("long").alias("hamming"), max_bucket_size,
+        keep=F.col("hamming") <= max_hamming,
     )
 
 
@@ -765,9 +758,7 @@ def lsh_verified_pairs(
     whole plan builds once per corpus version).
     """
     if sets is None:
-        sets = gram_sets(
-            df, text_col, id_col, shingle_k, partition_by_id=True
-        )
+        sets = gram_sets(df, text_col, id_col, shingle_k)
     cands = lsh_candidate_pairs(
         df, text_col, id_col,
         num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
@@ -820,57 +811,15 @@ def lsh_join(
     def banded(df):
         return band_keys(df, text_col, id_col, num_hashes, bands, shingle_k)
 
-    left = banded(new_df).select(
-        F.col("band"), F.col("band_key"),
-        F.col(id_col).alias("new_id"), F.col("sig").alias("sig_a"),
-    )
-    if corpus_banded is not None:
+    if corpus_banded is None:
+        corpus_banded = banded(corpus_df)
+    else:
         _check_injected_banding(corpus_banded, num_hashes, bands,
                                 "lsh_join(corpus_banded=)")
-    src = banded(corpus_df) if corpus_banded is None else corpus_banded
-    right = _drop_oversized_buckets(src, max_bucket_size).select(
-        F.col("band"), F.col("band_key"),
-        F.col(id_col).alias("corpus_id"), F.col("sig").alias("sig_b"),
-    )
-    # est_jaccard before the pair dedup (see lsh_candidate_pairs): the
-    # dedup exchange carries 24 bytes/pair, not two signature arrays
-    return (
-        left.join(right, ["band", "band_key"])
-        .select(
-            "new_id", "corpus_id",
-            _est_jaccard(num_hashes).alias("est_jaccard"),
-        )
-        .dropDuplicates()
-    )
-
-
-def _drop_oversized_buckets(
-    banded: DataFrame, max_bucket_size: int
-) -> DataFrame:
-    """Degenerate-bucket cap WITHOUT shuffling the banded rows: a narrow
-    two-column aggregate finds the (band, band_key) buckets over the cap
-    (map-side partial agg — the exchange carries per-bucket counts, not
-    rows) and a broadcast ANTI-join drops their rows map-side.
-
-    The former shape — ``count() over Window(band, band_key)`` — paid a
-    full Exchange + Sort of the banded CORPUS per ingest batch purely to
-    compute the cap, while the candidate join itself was broadcast and
-    never reused that partitioning (round 13, guide §2.3/§2.4).  Here
-    the corpus is scanned twice, but the second pass reads only the two
-    key columns and degenerate buckets are rare by construction, so the
-    broadcast side is ~empty.  Equivalent row-for-row: band_key is an
-    md5 hex string (never NULL), so anti-join semantics match the
-    window filter exactly.  The SELF-join path (lsh_candidate_pairs)
-    keeps its window — there the window's exchange doubles as the join
-    exchange and is shared via ReuseExchange."""
-    oversized = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > max_bucket_size)
-        .select("band", "band_key")
-    )
-    return banded.join(
-        F.broadcast(oversized), ["band", "band_key"], "left_anti"
+    return _bucket_pairs(
+        banded(new_df), ("band", "band_key"), id_col, ("sig",),
+        _est_jaccard(num_hashes).alias("est_jaccard"), max_bucket_size,
+        build=corpus_banded, ids=("new_id", "corpus_id"),
     )
 
 
@@ -1144,28 +1093,12 @@ def lsh_join_indexed(
     index = _artifact_relation(spark, index_path)
     if pred is not None:
         index = index.filter(pred)
-    # pruning keeps buckets whole (every row of a band_key shares its
-    # prefix), so capped counts over the PRUNED index equal lsh_join's;
-    # the agg+anti-join shape drops the index-side Exchange+Sort the
-    # window form paid (see _drop_oversized_buckets)
-    right = _drop_oversized_buckets(index, max_bucket_size).select(
-        "band", "band_key",
-        F.col(id_col).alias("corpus_id"), F.col("sig").alias("sig_b"),
+    return _bucket_pairs(
+        left, ("band", "band_key"), id_col, ("sig",),
+        _est_jaccard(num_hashes).alias("est_jaccard"), max_bucket_size,
+        build=index, ids=("new_id", "corpus_id"),
     )
-    # est_jaccard before the pair dedup (see lsh_candidate_pairs): the
-    # dedup exchange carries 24 bytes/pair, not two signature arrays
-    return (
-        left.select(
-            "band", "band_key",
-            F.col(id_col).alias("new_id"), F.col("sig").alias("sig_a"),
-        )
-        .join(right, ["band", "band_key"])
-        .select(
-            "new_id", "corpus_id",
-            _est_jaccard(num_hashes).alias("est_jaccard"),
-        )
-        .dropDuplicates()
-    )
+
 
 def fuzzy_join(
     left: DataFrame,

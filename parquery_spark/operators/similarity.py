@@ -152,18 +152,13 @@ def _explode_sums(
     double) and ``__p`` (0-based position) — one parser call each, where
     the former ``lambda(x, p)`` Column trees cost dozens of py4j round
     trips per term (round 12; measured ~0.4 s of driver time per 13-term
-    call).  Legacy callables are still accepted.
+    call).
     """
     pos = fan_out(df, id_col).select(
         F.col(id_col), F.posexplode(_as_double(vec_col)).alias("__p", "__x")
     )
-    x, p = F.col("__x"), F.col("__p")
     return pos.groupBy(id_col).agg(
-        *[
-            F.sum(make(x, p)).alias(name) if callable(make)
-            else F.expr(f"sum({make}) AS {name}")
-            for name, make in terms.items()
-        ]
+        *[F.expr(f"sum({sql}) AS {name}") for name, sql in terms.items()]
     )
 
 
@@ -200,21 +195,6 @@ def hyperplanes(dim: int, num_planes: int = 16, seed: int = 7) -> np.ndarray:
     """Deterministic random hyperplanes for sign-bit LSH."""
     rng = np.random.RandomState(seed)
     return rng.standard_normal((num_planes, dim))
-
-
-def lsh_bucket(vec: Column | str, planes: np.ndarray) -> Column:
-    """Sign-bit signature: bit j set iff dot(vec, plane_j) > 0.
-
-    Expression form (interpreted HOF dots) — fine for ad-hoc single rows;
-    bulk paths use :func:`lsh_bucket_table`, whose explode-shaped plane
-    sums stay inside whole-stage codegen."""
-    v = _as_double(vec)
-    expr = F.lit(0).cast("long")
-    for j, plane in enumerate(planes):
-        expr = expr + F.when(
-            dot_literal(v, plane.tolist()) > 0, F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return expr
 
 
 def _bucket_from_sums(num_planes: int) -> Column:
@@ -372,21 +352,15 @@ def near_dup_pairs(
     been built with the same (num_planes, seed, dim) or buckets/norms
     silently disagree; the artifact's logic tag carries those params."""
     # bucket + ‖v‖² in ONE explode pass (codegen partial-aggs); the vector
-    # itself is joined back for the per-pair verification.  The relation
-    # feeds both sides of the bucket self-join as ALIAS references
-    # (operators/reuse.py), so ReuseExchange computes the explode +
-    # norm aggregation once — no persisted intermediate (the old
-    # MEMORY_AND_DISK persist here leaked one session-lived cache per
-    # call); per-id norms computed here mean the per-pair expression is
-    # a single dot product.
+    # itself is joined back for the per-pair verification, so with per-id
+    # norms the per-pair expression is a single dot product
     if bucketed is None:
         bucketed = near_dup_bucket_table(
             df, vec_col, id_col, num_planes, seed, dim
         )
     else:
         _check_injected_bucket_table(bucketed, id_col, num_planes)
-    from parquery_spark.operators.reuse import self_join_reusing
-    from parquery_spark.operators.util import fan_out
+    from parquery_spark.operators.dedup import _bucket_pairs
 
     # Spread the verify join's probe side (round 12, guide §2.5): the
     # join key has only 2**num_planes distinct values, so an under-split
@@ -394,33 +368,21 @@ def near_dup_pairs(
     # the whole bucket-quadratic HOF-dot verification on one task — the
     # broadcast hash join inherits the probe side's layout, never the
     # key's.  Keying the spread by id keeps it balanced regardless of
-    # bucket skew, both sides still share the one exchange via
-    # ReuseExchange, and at cluster scale (well-split index) fan_out is
-    # a no-op.  Measured: 2.22 s -> 0.61 s at sf0.1, identical pairs.
+    # bucket skew, and at cluster scale (well-split index) fan_out is a
+    # no-op.  Measured: 2.22 s -> 0.61 s at sf0.1, identical pairs.
     bucketed = fan_out(bucketed, id_col)
 
-    pairs = self_join_reusing(
-        bucketed,
-        (F.col("__ca.bucket") == F.col("__cb.bucket"))
-        & (F.col(f"__ca.{id_col}") < F.col(f"__cb.{id_col}")),
-        a="__ca", b="__cb",
-    )
     # per-pair: each row carries two DIFFERENT vectors, so there is no
     # shared explode — the one HOF dot per candidate pair stays; candidate
     # volume (bucket-quadratic, threshold-pruned) bounds the cost
     sim = F.round(
-        dot(F.col("__ca.v"), F.col("__cb.v"))
-        / (F.col("__ca.nrm") * F.col("__cb.nrm")),
+        dot(F.col("v_a"), F.col("v_b")) / (F.col("nrm_a") * F.col("nrm_b")),
         digits,
     )
-    return (
-        pairs.select(
-            F.col(f"__ca.{id_col}").alias("id_a"),
-            F.col(f"__cb.{id_col}").alias("id_b"),
-            sim.alias("cosine_sim"),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
+    return _bucket_pairs(
+        bucketed, ("bucket",), id_col, ("v", "nrm"),
+        sim.alias("cosine_sim"), None,
+        keep=F.col("cosine_sim") >= threshold,
     )
 
 

@@ -18,9 +18,9 @@ Design for an unbounded 100 TB-rate feed:
 * **Signature computation is an Arrow-batched Python kernel**
   (``mapInPandas``), NOT the column-expression MinHash: higher-order
   lambdas are interpreted with no subexpression hoisting, so an
-  expression-form signature feeding 4 band keys re-tokenizes each
-  document ~16× per band reference (measured 30× slowdown class,
-  ``operators/dedup.py::minhash_signature``), while the explode-shaped
+  expression-form signature (one ``array_min(transform(...))`` per hash
+  seed) feeding 4 band keys re-tokenizes each document ~16× per band
+  reference (measured 30× slowdown class), while the explode-shaped
   JVM path (``minhash_signatures``) needs a groupBy — an aggregation
   Spark cannot chain upstream of ``applyInPandasWithState``.  The kernel
   replicates the JVM/oracle hash bit-for-bit (md5-prefix base hash,

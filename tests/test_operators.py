@@ -226,34 +226,67 @@ class TestDedup:
         ham_far = bin(out[1] ^ out[6]).count("1")
         assert ham_near < ham_far
 
-    def test_simhash_bucket_cap_drops_degenerate_buckets(self, spark):
+    @pytest.mark.parametrize("op", [
+        "simhash_candidates", "lsh_candidate_pairs",
+        "lsh_join", "lsh_join_indexed",
+    ])
+    def test_bucket_cap_drops_degenerate_buckets(self, spark, tmp_path, op):
         """The scale knob (round 12): identical docs all collide in every
         band, so an identical-content flood forms one oversized bucket
         per band.  With the cap below the flood size those buckets drop
-        and the flood pairs vanish; a distinct near-dup pair in its own
-        small buckets survives; uncapped enumeration still sees both."""
-        flood = [(i, "aurora borealis quantum zephyr") for i in range(12)]
-        near = [  # exact dup: hamming 0 by construction, bucket of 2
-            (100, "velvet marmot citadel orchard plume"),
-            (101, "velvet marmot citadel orchard plume"),
-        ]
-        docs = spark.createDataFrame(flood + near, ["doc_id", "text"])
-        kw = dict(bits=60, bands=5, max_hamming=4)
-        uncapped = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_candidates(
-                docs, "text", "doc_id", **kw
-            ).collect()
-        }
-        assert (100, 101) in uncapped
-        assert ((0, 1) in uncapped and len(uncapped) >= 66 + 1)
-        capped = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.simhash_candidates(
-                docs, "text", "doc_id", max_bucket_size=8, **kw
-            ).collect()
-        }
-        assert capped == {(100, 101)}  # flood buckets (12 > 8) dropped
+        and the flood pairs vanish; a near-dup pair in its own small
+        buckets survives; uncapped enumeration still sees both.  The
+        self-joins cap both sides; the incremental joins cap only the
+        corpus side, so twelve identical NEW docs still pair with their
+        one corpus twin."""
+        flood_text = "aurora borealis quantum zephyr"
+        near_text = "velvet marmot citadel orchard plume"
+        flood = [(i, flood_text) for i in range(12)]
+        cols = ["doc_id", "text"]
+        if op in ("simhash_candidates", "lsh_candidate_pairs"):
+            docs = spark.createDataFrame(
+                flood + [(100, near_text), (101, near_text)], cols
+            )
+            near = {(100, 101)}
+            flood_pairs = {(a, b) for a in range(12) for b in range(a + 1, 12)}
+
+            def pairs(cap):
+                if op == "simhash_candidates":
+                    return dedup.simhash_candidates(
+                        docs, "text", "doc_id", bits=60, bands=5,
+                        max_hamming=4, max_bucket_size=cap,
+                    )
+                return dedup.lsh_candidate_pairs(
+                    docs, "text", "doc_id", max_bucket_size=cap or 1000
+                )
+        else:
+            new = spark.createDataFrame(
+                [(200, flood_text)] + [(i, near_text) for i in range(100, 112)],
+                cols,
+            )
+            corpus = spark.createDataFrame(flood + [(300, near_text)], cols)
+            near = {(i, 300) for i in range(100, 112)}
+            flood_pairs = {(200, j) for j in range(12)}
+            idx = str(tmp_path / "idx")
+            if op == "lsh_join_indexed":
+                dedup.write_minhash_index(corpus, idx, "text", "doc_id")
+
+            def pairs(cap):
+                if op == "lsh_join_indexed":
+                    return dedup.lsh_join_indexed(
+                        spark, idx, new, "text", "doc_id",
+                        max_bucket_size=cap or 1000,
+                    )
+                return dedup.lsh_join(
+                    new, corpus, "text", "doc_id",
+                    max_bucket_size=cap or 1000,
+                )
+
+        def ids(cap):
+            return {(r[0], r[1]) for r in pairs(cap).collect()}
+
+        assert ids(None) >= near | flood_pairs
+        assert ids(8) == near  # flood buckets (12 > 8) dropped
 
     def test_simhash_bits_bounds(self, docs):
         # md5-derived 64-bit base provides only 60 usable bits; 64 would

@@ -1066,6 +1066,8 @@ class TestSubstringSpanPlans:
             substring_spans(docs, min_tokens=8, max_gram_occ=64),
             lsh_candidate_pairs(docs, "text", "doc_id"),
             simhash_candidates(docs, "text", "doc_id", bits=60, bands=5),
+            simhash_candidates(docs, "text", "doc_id", bits=60, bands=5,
+                               max_bucket_size=1000),
             lsh_verified_pairs(docs, "text", "doc_id"),
         ):
             df.collect()  # AQE reuse is visible in the FINAL plan
